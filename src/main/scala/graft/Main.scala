@@ -135,6 +135,8 @@ import graft.report.Report
   *                           staged two-phase swap (on Iceberg: a
   *                           MERGE touching relabeled rows only)
   *   --checkpoint DIR        materialize + resume stages via Catalog
+  *                           (a stage resumes only for the same
+  *                           input files, pre-dedup filters and config)
   *   --byte-verify           append a full byte-compare level to the
   *                           cascade (Theory.pod:113-118 — closes the
   *                           hash-collision caveat; off by default)
@@ -393,19 +395,6 @@ object Main {
     require(conf.clustersSnapshot.isEmpty,
       "--clusters-snapshot requires --snapshot or --near-snapshot")
 
-    val cfg = DedupPipeline.Config(
-      algs = if (conf.byteVerify) conf.algs :+ "bytes" else conf.algs,
-      ignoreEmpty = conf.ignoreEmpty,
-      useMinHash = !conf.exactOnly,
-      useSimHash = !conf.exactOnly,
-      minhash = minhashConfigOf(conf),
-      useSubstring = conf.substring.isDefined,
-      substring = conf.substring.map(m =>
-        DedupPipeline.SubstringConfig(minShared = m))
-        .getOrElse(DedupPipeline.SubstringConfig()),
-      useLongRun = conf.longrun.isDefined,
-      longRun = conf.longrun.map(l => DedupPipeline.LongRunConfig(minLen = l))
-        .getOrElse(DedupPipeline.LongRunConfig()))
     // the dataset-audit formats (overlap/lm/ccnet) read only the INPUT
     // corpus — running the dedup DAG (shingles, MinHash-128, banded
     // pairing, CC iterations) to then never read its result would cost
@@ -413,11 +402,7 @@ object Main {
     // audit formats never force it
     val auditOnly =
       Set("overlap", "lm", "ccnet", "mirrors", "hitters").contains(conf.format)
-    lazy val result = conf.checkpoint match {
-      case Some(dir) =>
-        DedupPipeline.runCheckpointed(docs, new graft.checkpoint.Catalog(dir, spark), cfg)
-      case None => DedupPipeline.run(docs, cfg)
-    }
+    lazy val result = runPipeline(spark, conf, docs)
 
     // quality keep-policy (r4 VERDICT #5): the cluster survivor is the
     // argmax-quality member instead of the min-url canonical. Keepers
@@ -703,6 +688,57 @@ object Main {
   private[graft] def minhashConfigOf(conf: Conf): graft.near.MinHashLSH.Config =
     conf.jaccard.map(t => graft.near.LshPlanner.configFor(t))
       .getOrElse(graft.near.MinHashLSH.Config())
+
+  /** The clustering pipeline over the loaded (and pre-filtered) `docs`:
+    * staged through the `--checkpoint` Catalog when one is given, keyed
+    * on [[inputLineage]] so a changed input never resumes another
+    * input's stage tables.
+    */
+  private[graft] def runPipeline(spark: SparkSession, conf: Conf,
+      docs: DataFrame): DedupPipeline.Result = {
+    val cfg = DedupPipeline.Config(
+      algs = if (conf.byteVerify) conf.algs :+ "bytes" else conf.algs,
+      ignoreEmpty = conf.ignoreEmpty,
+      useMinHash = !conf.exactOnly,
+      useSimHash = !conf.exactOnly,
+      minhash = minhashConfigOf(conf),
+      useSubstring = conf.substring.isDefined,
+      substring = conf.substring.map(m =>
+        DedupPipeline.SubstringConfig(minShared = m))
+        .getOrElse(DedupPipeline.SubstringConfig()),
+      useLongRun = conf.longrun.isDefined,
+      longRun = conf.longrun.map(l => DedupPipeline.LongRunConfig(minLen = l))
+        .getOrElse(DedupPipeline.LongRunConfig()))
+    DedupPipeline.run(docs, cfg,
+      conf.checkpoint.map(new graft.checkpoint.Catalog(_, spark)), inputLineage(conf))
+  }
+
+  /** Lineage of the rows that reach the pipeline: every distinct
+    * `--input` (`synth:N` verbatim — the corpus is a pure function of
+    * N; a file or directory as its sorted regular files with size and
+    * mtime; anything else, e.g. a remote URI, verbatim) plus the
+    * pre-dedup filters (`--block-domains`, `--badwords`, `--robots`
+    * table files, `--agent`, `--prefilter`).
+    */
+  private[graft] def inputLineage(conf: Conf): String = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def files(path: String): String =
+      if (path.startsWith("synth:") || !Files.exists(Paths.get(path))) path
+      else {
+        val walk = Files.walk(Paths.get(path))
+        try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+          .map(f => s"$f:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}")
+          .sorted.mkString(",")
+        finally walk.close()
+      }
+    (conf.inputs.distinct.map(i => s"input=${files(i)}") ++ Seq(
+      s"block=${conf.blockDomains.mkString(",")}",
+      s"badwords=${conf.badWords.mkString(",")}",
+      s"robots=${conf.robots.map(files).getOrElse("")}",
+      s"agent=${conf.agent.getOrElse("")}",
+      s"prefilter=${conf.prefilter.getOrElse("")}")).mkString("|")
+  }
 
   /** One (cluster_id, keep_id, best_score) row per cluster under a
     * non-default keep policy, or None for `min` (the pipeline's

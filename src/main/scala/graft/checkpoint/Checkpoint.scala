@@ -1,6 +1,8 @@
 package graft.checkpoint
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,11 +12,14 @@ import org.apache.spark.sql.functions._
   * implementation with the same surface — swapping `format("parquet")`
   * for `format("iceberg")` is the only change (SURVEY §1.3 note).
   *
-  * Resume semantics: a stage re-runs only if its lineage hash (a
-  * deterministic fingerprint of the stage's inputs + config) differs
-  * from the manifest entry written by the previous successful run.
-  * Otherwise its materialized output is read back — "skip stage if its
-  * output table exists and lineage matches".
+  * Resume semantics: a stage re-runs only if its lineage hash (the
+  * SHA-256 of a deterministic fingerprint of the stage's inputs +
+  * config) differs from the manifest entry written by the previous
+  * successful run. Otherwise its materialized output is read back —
+  * "skip stage if its output table exists and lineage matches". A
+  * stage's manifest is deleted before its table is overwritten and
+  * rewritten only after the write succeeds, so a write that fails
+  * partway leaves no manifest to resume from.
   */
 class Catalog(val root: String, spark: SparkSession) {
 
@@ -39,12 +44,13 @@ class Catalog(val root: String, spark: SparkSession) {
   def stage(name: String, lineage: String, partitionBy: Seq[String] = Nil)(
       compute: => DataFrame): DataFrame = {
     val lp = manifestPath(name)
-    val lh = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(lineage))
+    val lh = MessageDigest.getInstance("SHA-256")
+      .digest(lineage.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString
     if (exists(name) && Files.exists(lp) && new String(Files.readAllBytes(lp)).trim == lh) {
       read(name) // resume: lineage matches, skip recompute
     } else {
-      val df = compute
-      write(name, df, partitionBy)
+      Files.deleteIfExists(lp)
+      write(name, compute, partitionBy)
       Files.createDirectories(lp.getParent)
       Files.write(lp, lh.getBytes,
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,

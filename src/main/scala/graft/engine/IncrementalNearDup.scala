@@ -57,8 +57,10 @@ object IncrementalNearDup {
     // lazy checkpoint (r6): both snapshot views (band rows, shingle
     // sets) derive from one signature pass — unmaterialized, the
     // probe scan and the keeper-shingle fetch each re-shingled the
-    // prior corpus. In production the snapshot IS a persisted table;
-    // materializing here models that contract.
+    // prior corpus. In production the snapshot IS a persisted table.
+    // Materialization is deferred to the first consuming job, not done
+    // here: if one job reads both views before the signature
+    // partitions are cached, each view may compute them.
     val sigs = MinHashLSH.signatures(prior, cfg, textCol, idCol)
       .localCheckpoint(false)
     Snapshot(bandRows(sigs, cfg), sigs.select(col("id"), col("shingles")))

@@ -6,7 +6,8 @@ import graft.cluster.ConnectedComponents
 import graft.engine.{DedupEngine, DedupResult}
 import graft.functions.Digests
 import graft.near.{MinHashLSH, SimHash}
-import graft.report.{Report, Urls}
+import graft.report.Report
+import graft.substring.SubstringDedup
 
 /** The flagship end-to-end pipeline (north rule): exact content-hash
   * grouping (reference semantics, stage 1) + MinHash/LSH and SimHash
@@ -20,7 +21,12 @@ import graft.report.{Report, Urls}
   *                                                  ├─ MinHash/LSH [EXT] ─ verified edges
   *                                                  ├─ SimHash [EXT] ───── verified edges
   *                                                  └─ substring windows [EXT, opt-in]
-  *   all edges ∪ alias edges → connected components → (url, cluster_id)
+  *   all edges ∪ alias edges ∪ skip rows → edge table → connected components
+  *     → (url, cluster_id)
+  *
+  * The edge table and the clusters are the two stage points: local
+  * (checkpointed edges, lazy clusters) by default, or staged through a
+  * [[graft.checkpoint.Catalog]] for resumable runs.
   */
 object DedupPipeline {
 
@@ -70,18 +76,20 @@ object DedupPipeline {
       val edges: DataFrame, // (src, dst, kind)
       val quarantined: DataFrame,
       docsInThunk: () => Long,
-      /** Rows dropped by over-cap LSH/SimHash buckets (SCALE.md
-        * invariant 3: capped AND surfaced, never silent). Emitted as a
-        * side output of the candidate-generation pass itself — no
-        * second shingling scan.
-        */
-      val skippedBucketRows: Map[String, Long] = Map.empty,
-      /** checkpointed runs only: the deduped corpus (one row per
+      skippedThunk: () => Map[String, Long],
+      /** catalog runs only: the deduped corpus (one row per
         * cluster canonical), staged with the north rule's
         * (days(warc_ts), lang) physical layout
         */
       val dedupedDocs: Option[DataFrame] = None) {
     lazy val docsIn: Long = docsInThunk()
+    /** Rows dropped by over-cap near-dup buckets per stage (SCALE.md
+      * invariant 3: capped AND surfaced, never silent). Read back on
+      * first use from the edge table's skip rows, which the
+      * candidate-generation pass itself emits — no second shingling
+      * scan.
+      */
+    lazy val skippedBucketRows: Map[String, Long] = skippedThunk()
     lazy val quarantinedCount: Long = quarantined.count()
     /** duplicates-only tab report over final clusters (reference P2). */
     lazy val report: DataFrame = Report.duplicateReport(
@@ -105,174 +113,58 @@ object DedupPipeline {
         Seq("cluster_id"), col("__q"), "url")
   }
 
-  def run(docsRaw: DataFrame, cfg: Config = Config()): Result = {
+  /** The one pipeline DAG. Without a `catalog` the edge table is a
+    * local checkpoint and the clusters stay lazy; with one, the edge
+    * table, the clusters and the deduped corpus are staged through it
+    * (north rule: every stage materializes with lineage so the pipeline
+    * resumes mid-run without recompute). A re-run with the same
+    * `inputLineage` + config reads the stage tables back instead of
+    * recomputing, and per-stage metrics land in the catalog's metrics
+    * table (S5/S6). `inputLineage` must change whenever the rows of
+    * `docsRaw` may have changed.
+    */
+  def run(docsRaw: DataFrame, cfg: Config = Config(),
+      catalog: Option[graft.checkpoint.Catalog] = None, inputLineage: String = ""): Result = {
+    val base = s"$inputLineage|algs=${cfg.algs.mkString(",")}|ie=${cfg.ignoreEmpty}" +
+      s"|mh=${cfg.useMinHash}:${cfg.minhash}|sh=${cfg.useSimHash}:${cfg.simhash}" +
+      s"|sub=${cfg.useSubstring}:${cfg.substring}" +
+      s"|lr=${cfg.useLongRun}:${cfg.longRun}"
+
     // F4 quarantine: undecodable rows (text null) are counted and routed
     // out, never silently dropped (Files.pm:229-233, Files.t:290-299)
     val quarantined = docsRaw.filter(col("text").isNull)
     val valid0 = docsRaw.filter(col("text").isNotNull)
     val valid = if (cfg.ignoreEmpty) valid0.filter(octet_length(col("html")) > 0) else valid0
 
-    // F3 identity pre-pass: one canonical row per normalized url;
-    // alias edges keep the dropped members clustered with the canonical.
-    // r6: the identity pass runs ONCE — aliasEdges (the small
-    // loser→canonical set) is materialized via localCheckpoint, and
-    // canon is a broadcast anti-join of the source scan against its
-    // src column. Previously every canon consumer (digest cascade,
-    // shingling, final cluster join) re-executed the full
-    // groupBy+join identity subtree; page bytes are still never
-    // cached (only alias urls are). groupBy+join min, not a window
-    // (de-skew: a hot identity would sort its whole alias group in
-    // one window task).
-    val aliasEdges = valid
-      .select(Urls.normalize(col("url")).as("identity"), col("url"))
-      .join(valid
-        .select(Urls.normalize(col("url")).as("identity"), col("url"))
-        .groupBy(col("identity")).agg(min(col("url")).as("canonical")),
-        Seq("identity"))
-      .filter(col("url") =!= col("canonical"))
-      .select(col("url").as("src"), col("canonical").as("dst"), lit("alias").as("kind"))
-      // lazy (r6): cached on first use inside the first consuming job
-      // (the broadcast build for canon's anti-join) instead of a
-      // dedicated blocking job on the serial path
-      .localCheckpoint(false)
-    val canon = valid.join(
-      aliasEdges.select(col("src").as("url")), Seq("url"), "left_anti")
-
+    // F3 identity pre-pass, run ONCE (r6): the small loser→canonical
+    // alias set is cached by a lazy localCheckpoint on first use inside
+    // the first consuming job (the broadcast build for canon's
+    // anti-join), so canon's consumers (digest cascade, shingling)
+    // never re-execute the identity subtree and page bytes are never
+    // cached. Lazy vals: a RESUMED run that never touches canon pays no
+    // identity job.
+    lazy val aliases = Report.aliasEdges(valid).localCheckpoint(false)
+    lazy val canon = Report.dedupIdentity(valid, aliases = Some(aliases))
     // stage 1: exact content-hash cascade (reference semantics)
-    val exact = DedupEngine.run(canon, "url", Digests.cascade(col("html"), cfg.algs))
-    val exactEdges = exact.assignments
-      .filter(col("id") =!= col("block_id"))
-      .select(col("id").as("src"), col("block_id").as("dst"), lit("exact").as("kind"))
-
-    // [EXT] near-dup stages over non-empty canonical text. ONE
-    // shingling/signature pass feeds MinHash banding, verification,
-    // SimHash fingerprints AND the skip metrics (tokenize+hash is the
-    // dominant map-side cost); SimHash shares MinHash's shingles only
-    // when both stages use the same shingleK — a differing
-    // cfg.simhash.shingleK gets its own pass instead of silently
-    // inheriting the wrong feature universe.
-    val textDocs = canon.filter(trim(col("text")) =!= "")
-    val sameK = cfg.simhash.shingleK == cfg.minhash.shingleK
-    val sigsMh: Option[DataFrame] =
-      if (cfg.useMinHash || (cfg.useSimHash && sameK))
-        Some(MinHashLSH.signatures(textDocs, cfg.minhash).persist())
-      else None
-    val sigsSh: Option[DataFrame] =
-      if (!cfg.useSimHash) None
-      else if (sameK) sigsMh
-      else Some(MinHashLSH.signatures(textDocs,
-        cfg.minhash.copy(shingleK = cfg.simhash.shingleK)).persist())
-
-    // candidate pairs + over-cap skip rows, one streamed pass each;
-    // the (small) outputs are persisted so the skip sums don't re-run
-    // the shuffle
-    val mhOut = if (cfg.useMinHash)
-      Some(MinHashLSH.candidatesAndSkips(sigsMh.get, cfg.minhash).persist()) else None
-    val shOut = sigsSh.map(sg => SimHash.edgesAndSkips(
-      SimHash.fingerprintsFromShingles(sg, cfg.simhash), cfg.simhash).persist())
-
-    val mh = mhOut.map(o => MinHashLSH.verifyCandidates(
-        o.filter(col("src").isNotNull).select("src", "dst").distinct(),
-        sigsMh.get, cfg.minhash)
-      .withColumn("kind", lit("minhash")).drop("jaccard"))
-    val sh = shOut.map(_.filter(col("src").isNotNull).select("src", "dst").distinct()
-      .withColumn("kind", lit("simhash")))
-    // [EXT] optional substring stage: duplicated-window edges link docs
-    // with long shared runs that whole-doc similarity misses; over-cap
-    // windows surface as skip rows of the same pass (invariant 3)
-    val subOut = if (cfg.useSubstring)
-      Some(graft.substring.SubstringDedup.edgesAndSkips(textDocs,
-          cfg.substring.w, cfg.substring.stride, cfg.substring.minShared,
-          maxDocsPerWindow = cfg.substring.maxDocsPerWindow,
-          salts = cfg.substring.salts).persist())
-    else None
-    val sub = subOut.map(_.filter(col("src").isNotNull).select("src", "dst")
-      .withColumn("kind", lit("substring")))
-    // [EXT] optional long-run stage (Lee et al. policy): one exact
-    // shared run ≥ minLen chars links the pair, verified by LCS
-    val lrOut = if (cfg.useLongRun)
-      Some(graft.substring.SubstringDedup.longRunEdgesAndSkips(textDocs,
-        cfg.longRun.minLen, maxDocsPerGram = cfg.longRun.maxDocsPerGram,
-        salts = cfg.longRun.salts).persist())
-    else None
-    val lr = lrOut.map(_.filter(col("src").isNotNull).select("src", "dst")
-      .withColumn("kind", lit("longrun")))
-
-    // ONE materialization of the whole edge dag (alias + exact +
-    // near-dup); everything cached above is released right after —
-    // no persisted frame outlives the call (r2 VERDICT #2)
-    val allEdges = (Seq(Option(aliasEdges), Option(exactEdges), mh, sh, sub, lr).flatten
-      .map(_.select("src", "dst", "kind")).reduce(_ unionByName _))
-      .localCheckpoint()
-    // ONE driver action for all stages' skip sums (r6): the per-stage
-    // .head() jobs each paid a job-scheduling round trip on the serial
-    // path; the union of the (tiny, persisted-input) aggregates is one
-    // collect. Same Map, stage keys unchanged.
-    val skipFrames =
-      mhOut.map(o => ("minhash", o)).toSeq ++ shOut.map(o => ("simhash", o)) ++
-        subOut.map(o => ("substring", o)) ++ lrOut.map(o => ("longrun", o))
-    val skippedCounts = skipFrames
-      .map { case (k, o) => o.filter(col("src").isNull)
-        .agg(coalesce(sum(col("skipped")), lit(0L)).as("skipped"))
-        .select(lit(k).as("stage"), col("skipped")) }
-      .reduceOption(_ unionByName _)
-      .map(_.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      .getOrElse(Map.empty[String, Long])
-    (sigsMh.toSeq ++ sigsSh.toSeq).distinct.foreach(_.unpersist())
-    (mhOut.toSeq ++ shOut.toSeq ++ subOut.toSeq ++ lrOut.toSeq).foreach(_.unpersist())
-
-    // [EXT] connected components; singletons keep their own id
-    val cc = ConnectedComponents.run(allEdges.select("src", "dst"))
-    val clusters = valid.select(col("url"))
-      .join(cc, valid("url") === cc("id"), "left")
-      .select(col("url"), coalesce(col("component"), col("url")).as("cluster_id"))
-
-    new Result(clusters, exact, allEdges, quarantined, () => docsRaw.count(), skippedCounts)
-  }
-
-  /** Checkpointed variant (north rule: every stage materializes with
-    * lineage so the pipeline resumes mid-run without recompute). The
-    * edge set and the final clusters are staged through the Catalog;
-    * a re-run with the same config + input lineage reads the tables
-    * back instead of recomputing, and per-stage row/partition metrics
-    * land in the catalog's metrics table (S5/S6).
-    */
-  def runCheckpointed(docsRaw: DataFrame, catalog: graft.checkpoint.Catalog,
-      cfg: Config = Config(), inputLineage: String = ""): Result = {
-    val base = s"$inputLineage|algs=${cfg.algs.mkString(",")}|ie=${cfg.ignoreEmpty}" +
-      s"|mh=${cfg.useMinHash}:${cfg.minhash}|sh=${cfg.useSimHash}:${cfg.simhash}" +
-      s"|sub=${cfg.useSubstring}:${cfg.substring}" +
-      s"|lr=${cfg.useLongRun}:${cfg.longRun}"
-
-    val quarantined = docsRaw.filter(col("text").isNull)
-    val valid0 = docsRaw.filter(col("text").isNotNull)
-    val valid = if (cfg.ignoreEmpty) valid0.filter(octet_length(col("html")) > 0) else valid0
-    // identity pass ONCE (r6 — see run()): lazy localCheckpoint so a
-    // RESUMED run that never touches canon pays no identity job
-    lazy val aliasEdges = valid
-      .select(Urls.normalize(col("url")).as("identity"), col("url"))
-      .join(valid
-        .select(Urls.normalize(col("url")).as("identity"), col("url"))
-        .groupBy(col("identity")).agg(min(col("url")).as("canonical")),
-        Seq("identity"))
-      .filter(col("url") =!= col("canonical"))
-      .select(col("url").as("src"), col("canonical").as("dst"), lit("alias").as("kind"))
-      .localCheckpoint(false)
-    lazy val canon = valid.join(
-      aliasEdges.select(col("src").as("url")), Seq("url"), "left_anti")
     lazy val exact = DedupEngine.run(canon, "url", Digests.cascade(col("html"), cfg.algs))
 
-    // stage 1: the full edge set (alias + exact + near-dup edges) PLUS
-    // one aggregated skip row per near-dup stage (kind = 'skip:<stage>',
-    // src/dst null) — the over-cap metric is part of the stage's
-    // materialized output, so a RESUME reads it back instead of
-    // re-shingling the corpus (r2 VERDICT #3). Resume skips
-    // digesting/shingling entirely.
-    var toRelease = Seq.empty[DataFrame]
-    val staged = catalog.stage("edges", base) {
+    // The edge table: alias + exact + near-dup edges PLUS one aggregated
+    // skip row per near-dup stage (kind = 'skip:<stage>', src/dst null,
+    // SCALE.md invariant 3: capped AND surfaced) — the over-cap metric
+    // is part of the materialized edge table, so a resume reads it back
+    // instead of re-shingling the corpus (r2 VERDICT #3).
+    var persisted = Seq.empty[DataFrame]
+    def edgeTable(): DataFrame = {
       val exactEdges = exact.assignments
         .filter(col("id") =!= col("block_id"))
         .select(col("id").as("src"), col("block_id").as("dst"), lit("exact").as("kind"))
+      // [EXT] near-dup stages over non-empty canonical text. ONE
+      // shingling/signature pass feeds MinHash banding, verification
+      // and SimHash fingerprints (tokenize+hash is the dominant
+      // map-side cost); SimHash shares MinHash's shingles only when
+      // both stages use the same shingleK — a differing
+      // cfg.simhash.shingleK gets its own pass instead of silently
+      // inheriting the wrong feature universe.
       val textDocs = canon.filter(trim(col("text")) =!= "")
       val sameK = cfg.simhash.shingleK == cfg.minhash.shingleK
       val sigsMh: Option[DataFrame] =
@@ -284,74 +176,79 @@ object DedupPipeline {
         else if (sameK) sigsMh
         else Some(MinHashLSH.signatures(textDocs,
           cfg.minhash.copy(shingleK = cfg.simhash.shingleK)).persist())
-      val mhOut = if (cfg.useMinHash)
-        Some(MinHashLSH.candidatesAndSkips(sigsMh.get, cfg.minhash).persist()) else None
-      val shOut = sigsSh.map(sg => SimHash.edgesAndSkips(
-        SimHash.fingerprintsFromShingles(sg, cfg.simhash), cfg.simhash).persist())
-      val subOut = if (cfg.useSubstring)
-        Some(graft.substring.SubstringDedup.edgesAndSkips(textDocs,
-            cfg.substring.w, cfg.substring.stride, cfg.substring.minShared,
-            maxDocsPerWindow = cfg.substring.maxDocsPerWindow,
-            salts = cfg.substring.salts).persist())
-      else None
-      val lrOut = if (cfg.useLongRun)
-        Some(graft.substring.SubstringDedup.longRunEdgesAndSkips(textDocs,
-          cfg.longRun.minLen, maxDocsPerGram = cfg.longRun.maxDocsPerGram,
-          salts = cfg.longRun.salts).persist())
-      else None
-      toRelease = (sigsMh.toSeq ++ sigsSh.toSeq).distinct ++ mhOut.toSeq ++
-        shOut.toSeq ++ subOut.toSeq ++ lrOut.toSeq
-      val mh = mhOut.map(o => MinHashLSH.verifyCandidates(
-          o.filter(col("src").isNotNull).select("src", "dst").distinct(),
-          sigsMh.get, cfg.minhash)
-        .withColumn("kind", lit("minhash")).drop("jaccard"))
-      val sh = shOut.map(_.filter(col("src").isNotNull).select("src", "dst").distinct()
-        .withColumn("kind", lit("simhash")))
-      val sub = subOut.map(_.filter(col("src").isNotNull).select("src", "dst")
-        .withColumn("kind", lit("substring")))
-      val lr = lrOut.map(_.filter(col("src").isNotNull).select("src", "dst")
-        .withColumn("kind", lit("longrun")))
-      def skipRow(o: DataFrame, kind: String): DataFrame = o
+      // (kind, candidate pairs + over-cap skip rows of one streamed
+      // pass, candidate pairs → edges). The optional substring stages
+      // link docs with long shared runs that whole-doc similarity
+      // misses: duplicated windows, or one exact shared run ≥ minLen
+      // chars verified by LCS (Lee et al. policy).
+      val stages: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
+        Option.when(cfg.useMinHash)(("minhash",
+          MinHashLSH.candidatesAndSkips(sigsMh.get, cfg.minhash),
+          (p: DataFrame) => MinHashLSH.verifyCandidates(p.distinct(), sigsMh.get, cfg.minhash))),
+        sigsSh.map(sg => ("simhash",
+          SimHash.edgesAndSkips(SimHash.fingerprintsFromShingles(sg, cfg.simhash), cfg.simhash),
+          (p: DataFrame) => p.distinct())),
+        Option.when(cfg.useSubstring)(("substring",
+          SubstringDedup.edgesAndSkips(textDocs, cfg.substring.w, cfg.substring.stride,
+            cfg.substring.minShared, maxDocsPerWindow = cfg.substring.maxDocsPerWindow,
+            salts = cfg.substring.salts),
+          (p: DataFrame) => p)),
+        Option.when(cfg.useLongRun)(("longrun",
+          SubstringDedup.longRunEdgesAndSkips(textDocs, cfg.longRun.minLen,
+            maxDocsPerGram = cfg.longRun.maxDocsPerGram, salts = cfg.longRun.salts),
+          (p: DataFrame) => p))
+      ).flatten.map { case (kind, out, toEdges) => (kind, out.persist(), toEdges) }
+      // the (small) stage outputs are persisted so the edges and the
+      // skip sums share one shuffle; released once the table is staged
+      persisted = (sigsMh.toSeq ++ sigsSh.toSeq).distinct ++ stages.map(_._2)
+      val edgeRows = aliases +: exactEdges +: stages.map { case (kind, out, toEdges) =>
+        toEdges(out.filter(col("src").isNotNull).select("src", "dst"))
+          .select(col("src"), col("dst"), lit(kind).as("kind"))
+      }
+      val skipRows = stages.map { case (kind, out, _) => out
         .filter(col("src").isNull)
         .agg(coalesce(sum(col("skipped")), lit(0L)).as("skipped"))
         .select(lit(null).cast("string").as("src"), lit(null).cast("string").as("dst"),
-          lit(s"skip:$kind").as("kind"), col("skipped"))
-      val edgeRows = (Seq(Some(aliasEdges), Some(exactEdges), mh, sh, sub, lr).flatten
-        .map(_.select("src", "dst", "kind").withColumn("skipped", lit(0L))))
+          lit(s"skip:$kind").as("kind"), col("skipped")) }
+      (edgeRows.map(_.withColumn("skipped", lit(0L))) ++ skipRows)
         .reduce(_ unionByName _)
-      (edgeRows +: (mhOut.map(skipRow(_, "minhash")).toSeq ++
-        shOut.map(skipRow(_, "simhash")).toSeq ++
-        subOut.map(skipRow(_, "substring")).toSeq ++
-        lrOut.map(skipRow(_, "longrun")).toSeq)).reduce(_ unionByName _)
     }
-    toRelease.foreach(_.unpersist())
+    // ONE materialization of the whole edge dag; no persisted frame
+    // outlives the call (r2 VERDICT #2)
+    val staged = catalog.fold(edgeTable().localCheckpoint())(_.stage("edges", base)(edgeTable()))
+    persisted.foreach(_.unpersist())
     val edges = staged.filter(!col("kind").startsWith("skip:")).drop("skipped")
-    val skippedCounts = staged.filter(col("kind").startsWith("skip:"))
+    lazy val skippedCounts = staged.filter(col("kind").startsWith("skip:"))
       .select(col("kind"), col("skipped")).collect()
       .map(r => r.getString(0).stripPrefix("skip:") -> r.getLong(1)).toMap
 
-    // stage 2: connected components over the staged edges
-    val clusters = catalog.stage("clusters", base + "|edges") {
+    // [EXT] connected components over the edge table; singletons keep
+    // their own id
+    def clusterTable(): DataFrame = {
       val cc = ConnectedComponents.run(edges.select("src", "dst"))
       valid.select(col("url"))
         .join(cc, valid("url") === cc("id"), "left")
         .select(col("url"), coalesce(col("component"), col("url")).as("cluster_id"))
     }
-    // stage 3: the deduped corpus itself (one row per cluster
-    // canonical), laid out by the north rule's (days(warc_ts), lang)
-    // partitioning — partition pruning serves day- or language-scoped
-    // downstream reads without a full scan
-    val deduped = catalog.stage("deduped_docs", base + "|clusters",
-      Seq("warc_day", "lang")) {
-      valid
-        .join(clusters.filter(col("url") === col("cluster_id")).select("url"), "url")
-        .withColumn("warc_day", to_date(col("warc_ts")))
+    val clusters = catalog.fold(clusterTable())(_.stage("clusters", base + "|edges")(clusterTable()))
+
+    // the deduped corpus itself (one row per cluster canonical), laid
+    // out by the north rule's (days(warc_ts), lang) partitioning —
+    // partition pruning serves day- or language-scoped downstream reads
+    // without a full scan
+    val deduped = catalog.map { cat =>
+      val d = cat.stage("deduped_docs", base + "|clusters", Seq("warc_day", "lang")) {
+        valid
+          .join(clusters.filter(col("url") === col("cluster_id")).select("url"), "url")
+          .withColumn("warc_day", to_date(col("warc_ts")))
+      }
+      cat.recordMetrics("clusters", Map(
+        "clusters" -> clusters.select(col("cluster_id")).distinct().count(),
+        "edges" -> edges.count()) ++
+        skippedCounts.map { case (k, v) => s"skipped_bucket_rows_$k" -> v })
+      d
     }
-    catalog.recordMetrics("clusters", Map(
-      "clusters" -> clusters.select(col("cluster_id")).distinct().count(),
-      "edges" -> edges.count()) ++
-      skippedCounts.map { case (k, v) => s"skipped_bucket_rows_$k" -> v })
     new Result(clusters, exact, edges, quarantined, () => docsRaw.count(),
-      skippedCounts, Some(deduped))
+      () => skippedCounts, deduped)
   }
 }

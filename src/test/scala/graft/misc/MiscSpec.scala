@@ -1840,6 +1840,36 @@ class CheckpointSpec extends SparkSpec {
     assert(cat.partitionCounts(cat.read("s1")).agg(sum(col("count"))).head().getLong(0) == 10L)
   }
 
+  test("stage lineages that collide under a 32-bit string hash do not resume each other") {
+    // birthday search: a 32-bit hash collides within ~10^5 strings
+    // (this sequence: lineage-11566 / lineage-113427)
+    val seen = scala.collection.mutable.HashMap.empty[Int, String]
+    var pair: Option[(String, String)] = None
+    var i = 0
+    while (pair.isEmpty) {
+      val l = s"lineage-$i"
+      val h = scala.util.hashing.MurmurHash3.stringHash(l)
+      seen.get(h) match {
+        case Some(prev) => pair = Some((prev, l))
+        case None => seen(h) = l
+      }
+      i += 1
+    }
+    val (x, y) = pair.get
+    val cat = new Catalog(java.nio.file.Files.createTempDirectory("graft-cat-hash").toString, spark)
+    assert(cat.stage("s", x)(spark.range(3).toDF("id")).count() == 3)
+    assert(cat.stage("s", y)(spark.range(7).toDF("id")).count() == 7)
+  }
+
+  test("a failed stage overwrite leaves no manifest: the old lineage recomputes") {
+    val cat = new Catalog(java.nio.file.Files.createTempDirectory("graft-cat-fail").toString, spark)
+    assert(cat.stage("s", "x")(spark.range(3).toDF("id")).count() == 3)
+    val boom = udf((id: Long) => { if (id >= 0) throw new IllegalStateException("boom"); id })
+    intercept[Exception](cat.stage("s", "y")(spark.range(5).select(boom(col("id")).as("id"))))
+    val again = cat.stage("s", "x")(spark.range(3).toDF("id"))
+    assert(again.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
   test("IVF centroids persist as a model artifact: resume skips retraining, cells stable (r3 VERDICT #7)") {
     import spark.implicits._
     def prf(seed: Long): Float =

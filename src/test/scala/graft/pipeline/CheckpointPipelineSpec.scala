@@ -17,7 +17,7 @@ class CheckpointPipelineSpec extends SparkSpec {
     val cat = new Catalog(dir, spark)
 
     val direct = DedupPipeline.run(docs)
-    val staged = DedupPipeline.runCheckpointed(docs, cat, inputLineage = "corpus400")
+    val staged = DedupPipeline.run(docs, catalog = Some(cat), inputLineage = "corpus400")
     // identical cluster assignments
     assert(direct.clusters.exceptAll(staged.clusters).count() == 0)
     assert(staged.clusters.exceptAll(direct.clusters).count() == 0)
@@ -31,14 +31,14 @@ class CheckpointPipelineSpec extends SparkSpec {
     val stagedCount = staged.clusters.count()
     val before = (mtimes("edges"), mtimes("clusters"))
     Thread.sleep(1100)
-    val resumed = DedupPipeline.runCheckpointed(docs, cat, inputLineage = "corpus400")
+    val resumed = DedupPipeline.run(docs, catalog = Some(cat), inputLineage = "corpus400")
     assert(resumed.clusters.count() == stagedCount)
     assert((mtimes("edges"), mtimes("clusters")) == before,
       "stage tables were rewritten on an unchanged-lineage resume")
 
     // changed config ⇒ lineage differs ⇒ stages recompute
-    val changed = DedupPipeline.runCheckpointed(docs, cat,
-      cfg = DedupPipeline.Config(ignoreEmpty = true), inputLineage = "corpus400")
+    val changed = DedupPipeline.run(docs, DedupPipeline.Config(ignoreEmpty = true),
+      Some(cat), "corpus400")
     val changedCount = changed.clusters.count()
     assert(mtimes("edges") != before._1)
     assert(changedCount <= stagedCount)
@@ -67,20 +67,36 @@ class CheckpointPipelineSpec extends SparkSpec {
         maxDocsPerWindow = 3),
       useLongRun = true,
       longRun = DedupPipeline.LongRunConfig(minLen = 90))
-    val staged = DedupPipeline.runCheckpointed(docs, cat, cfg, inputLineage = "sub6")
+    val staged = DedupPipeline.run(docs, cfg, Some(cat), "sub6")
     assert(staged.skippedBucketRows.get("substring").exists(_ >= 6L))
     assert(staged.skippedBucketRows.get("longrun").contains(0L))
     assert(staged.edges.filter(col("kind") === "longrun").count() >= 1)
     // resume: metrics come back from the staged table, not a recompute
-    val resumed = DedupPipeline.runCheckpointed(docs, cat, cfg, inputLineage = "sub6")
+    val resumed = DedupPipeline.run(docs, cfg, Some(cat), "sub6")
     assert(resumed.skippedBucketRows == staged.skippedBucketRows)
+    // the plain run builds the same edge table: same skip counts, same
+    // edges (skip rows are not edges on either path)
+    val plain = DedupPipeline.run(docs, cfg)
+    assert(plain.skippedBucketRows == staged.skippedBucketRows)
+    assert(plain.edges.exceptAll(staged.edges).count() == 0)
+    assert(staged.edges.exceptAll(plain.edges).count() == 0)
+  }
+
+  test("CLI --checkpoint resume is keyed on the input: synth:300 then synth:900 gives 855 rows") {
+    val dir = Files.createTempDirectory("graft-ckpt-cli").toString
+    def cli(input: String): Long = {
+      val conf = graft.Main.parse(List("--input", input, "--checkpoint", dir))
+      graft.Main.runPipeline(spark, conf, graft.Main.load(spark, input)).clusters.count()
+    }
+    assert(cli("synth:300") == 285L)
+    assert(cli("synth:900") == 855L)
   }
 
   test("deduped corpus stage uses the (days(warc_ts), lang) layout (north rule)") {
     val docs = Corpus.docs(spark, 300).toDF()
     val dir = Files.createTempDirectory("graft-ckpt-layout").toString
     val cat = new Catalog(dir, spark)
-    val r = DedupPipeline.runCheckpointed(docs, cat, inputLineage = "corpus300")
+    val r = DedupPipeline.run(docs, catalog = Some(cat), inputLineage = "corpus300")
     // physical directory layout: warc_day=YYYY-MM-DD/lang=xx
     import scala.jdk.CollectionConverters._
     val dayDirs = Files.list(Paths.get(s"$dir/deduped_docs")).iterator().asScala
